@@ -302,16 +302,10 @@ object Pipeline {
   }
 
   /** blocked candidate pairs with surface similarity + linkage decision.
-    * Stage-cached: el_pairs and el_clusters share one blockSeq snapshot +
+    * Stage-cached: el_pairs and el_clusters share one range sort +
     * scoring pass instead of re-running the whole pairing per query. */
   def pairs(spark: SparkSession, sfDir: String): DataFrame =
-    cached(spark, sfDir, "pairs") {
-      // the annotate input is a persisted stage cache, so blockSeq's
-      // input-materialization snapshot is redundant here (the range
-      // sampling re-scans the cache); the scale pipeline keeps the default
-      Pairs.candidatePairs(annotate(spark, sfDir),
-        seqImpl = (m0, np) => Pairs.blockSeq(m0, np, inputMaterialized = true))
-    }
+    cached(spark, sfDir, "pairs")(Pairs.candidatePairs(annotate(spark, sfDir)))
 
   /** mention clusters: transitive closure of same-entity pairs. */
   def clusters(spark: SparkSession, sfDir: String): DataFrame = {

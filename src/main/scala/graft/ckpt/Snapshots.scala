@@ -88,7 +88,19 @@ object Snapshots {
     // to every incremental/streaming query body that commits snapshots.
     // Counter values are byte-identical to the scan's (footer row counts
     // are exact).
-    val counters = Files.list(dir).iterator().asScala
+    val counters = footerRowCounts(spark, dir.toString)
+    val m = Manifest(stage, id, inputs, counters.map(_._2).sum, counters)
+    val tmp = dir.resolve("_MANIFEST.json.tmp")
+    Files.writeString(tmp, render(m))
+    Files.move(tmp, dir.resolve("_MANIFEST.json"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE) // the commit point
+    (dir.toString, m)
+  }
+
+  /** Row count of each parquet file in `dir`, sorted by file name, from
+    * the file footers: driver-side metadata, no Spark job. */
+  private[graft] def footerRowCounts(spark: SparkSession, dir: String): Seq[(String, Long)] =
+    Files.list(Paths.get(dir)).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map { p =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -98,13 +110,6 @@ object Snapshots {
         try (p.getFileName.toString, r.getRecordCount) finally r.close()
       }
       .toSeq.sortBy(_._1)
-    val m = Manifest(stage, id, inputs, counters.map(_._2).sum, counters)
-    val tmp = dir.resolve("_MANIFEST.json.tmp")
-    Files.writeString(tmp, render(m))
-    Files.move(tmp, dir.resolve("_MANIFEST.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE) // the commit point
-    (dir.toString, m)
-  }
 
   /** Full commit history of a stage, oldest first (Iceberg's `.snapshots`
     * metadata table). Only committed snapshots (manifest in place) appear. */

@@ -1,6 +1,7 @@
 package graft.link
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.JaroWinkler.jaroWinkler
@@ -19,15 +20,32 @@ import graft.functions.JaroWinkler.jaroWinkler
   *
   * Distribution: a plain `lead() over (partition by block_key)` puts the
   * hottest Zipfian block on ONE task (AQE skew splitting applies to joins,
-  * not window partitions) — the round-1 scale killer. Instead we compute a
-  * globally-dense per-block sequence number with `blockSeq` (range
-  * partitioning + bounded local windows + tiny boundary prefix sums) and
-  * form pairs as an equi-join on (block_key, seq + k), whose join keys are
-  * unique — perfectly spreadable, no skew at any scale.
+  * not window partitions). Instead the pairs come from one range sort:
+  *
+  *   1. `repartitionByRange(block_key, mention_id)` + `sortWithinPartitions`:
+  *      balanced partitions whose concatenation in partition order is the
+  *      global (block_key, mention_id) order, so a hot block occupies a
+  *      contiguous run of partitions;
+  *   2. in-partition pairs: one pass per partition with a ring buffer of the
+  *      last `windowSize` rows;
+  *   3. boundary stitching: a second pass over the same sorted partitions
+  *      emits each partition's first and last `windowSize` rows, tagged with
+  *      (partition index, position, partition size). Those
+  *      <= 2 * windowSize * parts rows meet in one single-partition group,
+  *      where the prefix sums of the partition sizes give their global ranks
+  *      and the pairs whose two rows lie in different partitions are formed.
+  *
+  * Both passes read the same range Exchange (reused, not re-shuffled). No
+  * window, no join, no per-block task.
   */
 object Pairs {
 
   val WindowSize = 2
+
+  /** Range partitions are sized to about this many mentions each, capped at
+    * twice the default parallelism: a small mention set would otherwise
+    * pay per-task overhead for nearly empty partitions. */
+  private val RowsPerPart = 20000L
 
   /** Stable numeric mention id: doc_id * 10^8 + start * 10^4 + end offset
     * (spans are < 10^4 by the tagger text cap). */
@@ -35,96 +53,144 @@ object Pairs {
     (col("doc_id").cast("long") * lit(100000000L)) +
       (col("start").cast("long") * lit(10000L)) + col("end").cast("long")
 
-  /** Globally-dense 1-based sequence number per block — semantically
-    * `row_number() over (partition by block_key order by mention_id)` —
-    * without ever materializing a block on a single task:
-    *
-    *   1. `repartitionByRange(block_key, mention_id)`: balanced partitions;
-    *      each block occupies a CONTIGUOUS run of partitions;
-    *   2. `row_number()` within (partition, block): every window partition
-    *      is bounded by the range-partition size, never by block size;
-    *   3. prefix-sum the per-(partition, block) counts per block: only
-    *      blocks that span a partition boundary get a nonzero offset, and
-    *      by contiguity there are at most `numPartitions` such rows —
-    *      broadcast them back.
-    *
-    * The input must have a unique `mention_id` within each block (ids are
-    * globally unique here).
-    *
-    * Materialization: the input and the range-partitioned frame are each
-    * written ONCE to a scratch parquet snapshot and read back (the
-    * north_rule's stage-checkpoint pattern). Round-2 used
-    * persist + localCheckpoint instead, and that was the engine's
-    * anti-scaling pathology: under AQE the range-sampling job, the shuffle
-    * map stage and the eager-checkpoint job each raced to build the same
-    * cached blocks, recomputing the whole upstream (annotate!) a
-    * nondeterministic number of times — thread dumps at local[16] showed
-    * 32 tasks re-running MapGroupsExec + columnar cache build inside the
-    * "localCheckpoint" stage, 150 s of real work ballooning to
-    * 735-3449 s CPU. A committed file snapshot has none of those races:
-    * upstream executes exactly once, the sampling job reads parquet, and
-    * the pid column is pinned as data, deterministic across every
-    * downstream job. This is also the plan that survives executor loss on
-    * a real cluster (localCheckpoint does not).
-    */
-  private[graft] def blockSeq(m0: DataFrame, numParts: Int,
-      inputMaterialized: Boolean = false): DataFrame = {
-    val spark = m0.sparkSession
-    val dir = scratchDir(spark)
-    // The m snapshot exists to make the input execute exactly once: the
-    // range exchange below runs a SEPARATE sampling job over its child,
-    // which would otherwise re-execute the whole upstream (annotate!) per
-    // job. When the caller guarantees the input is already materialized
-    // (a persisted stage cache, Pipeline.pairs), the sampling job is a
-    // cheap cache re-scan and the snapshot write+read is pure overhead —
-    // skip it. The `part` snapshot below is NOT skippable in either mode:
-    // it pins the pid column as data (two consumers + nondeterministic
-    // range boundaries otherwise).
-    val mIn =
-      if (inputMaterialized) m0
-      else {
-        m0.write.mode("overwrite").parquet(s"$dir/m")
-        spark.read.parquet(s"$dir/m")
-      }
-    // Scale-adaptive width: numParts is the caller's parallelism target for
-    // corpus-sized inputs, but a small mention set (driver-contract queries)
-    // pays ~numParts of pure per-task/per-file overhead in the range write,
-    // the local windows and every downstream scan. The materialized input
-    // makes the row count cheap (parquet footer metadata / cache stats), so
-    // size the range partitioning to ~20k rows per partition, capped at the
-    // caller's target — at pipeline scale rows/20k far exceeds numParts and
-    // the behavior is unchanged.
-    val mRows = mIn.count()
-    val parts = math.max(4L, math.min(numParts.toLong, mRows / 20000L + 1L)).toInt
-    mIn
+  /** One blocked mention, as the range sort orders it. */
+  final case class Blocked(block_key: String, mention_id: Long, surface: String,
+      best_qid: String)
+
+  /** One candidate pair before scoring; id1 is the earlier mention. */
+  final case class RawPair(block_key: String, id1: Long, id2: Long,
+      surface1: String, surface2: String, qid1: String, qid2: String)
+
+  /** A partition's head or tail row: its partition index, its position in
+    * the partition and the partition's size. */
+  final case class EdgeRow(part: Int, pos: Long, size: Long, m: Blocked)
+
+  /** Block key (first token of the normalized surface) and mention id of
+    * linked mentions: coarse enough that one block mixes different entities
+    * ("merge" / "merge join" / "sort merge join" variants), the realistic
+    * record-linkage setup. */
+  private[graft] def blocked(mentions: DataFrame): DataFrame =
+    mentions
+      .withColumn("mention_id", mentionIdCol)
+      .withColumn("block_key", split(col("norm_key"), " ").getItem(0))
+      .select("block_key", "mention_id", "surface", "best_qid")
+
+  /** Sorted-neighborhood candidate pairs within each blocking key.
+    * Input: linked mentions (doc_id, start, end, surface, norm_key,
+    * best_qid). Output: one row per pair with surface similarities and the
+    * same_entity decision (= linked entity agreement). */
+  def candidatePairs(mentions: DataFrame, windowSize: Int = WindowSize): DataFrame = {
+    val (m, rows) = snapshot(blocked(mentions))
+    val cap = mentions.sparkSession.sparkContext.defaultParallelism * 2L
+    sortedNeighbourPairs(m, math.max(4L, math.min(cap, rows / RowsPerPart + 1L)).toInt,
+      windowSize)
+  }
+
+  /** `candidatePairs` over blocked mentions (`blocked`) with an explicit
+    * range-partition count. `m` must be cheap to scan twice and must not
+    * be a cached relation (see `snapshot`). */
+  private[graft] def sortedNeighbourPairs(m: DataFrame, parts: Int,
+      windowSize: Int): DataFrame = {
+    val spark = m.sparkSession
+    import spark.implicits._
+    // both passes must read ONE range shuffle: a second one would sample
+    // its own range bounds and partition the rows differently
+    require(spark.conf.get("spark.sql.exchange.reuse", "true").toBoolean,
+      "sorted-neighbourhood pairs need spark.sql.exchange.reuse=true")
+    val sorted = m
       .repartitionByRange(parts, col("block_key"), col("mention_id"))
-      .withColumn("pid", spark_partition_id())
-      .write.mode("overwrite").parquet(s"$dir/part")
-    // the m snapshot is fully consumed by the part write above — delete it
-    // NOW instead of at JVM exit (tmpfs scratch; long-lived sessions were
-    // accumulating two full copies per call, r3 ADVICE). The part snapshot
-    // must outlive the returned (lazy) frame and stays until exit cleanup.
-    if (!inputMaterialized) rmDir(s"$dir/m")
-    val part = spark.read.parquet(s"$dir/part")
-    val cnts = part.groupBy("pid", "block_key").agg(count(lit(1)).as("cnt"))
-    val wOff = Window.partitionBy("block_key").orderBy("pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = cnts
-      .withColumn("off", sum(col("cnt")).over(wOff))
-      .filter(col("off").isNotNull && col("off") > lit(0L))
-      .select(col("pid"), col("block_key"), col("off"))
-    val wLocal = Window.partitionBy("pid", "block_key").orderBy("mention_id")
-    part
-      .withColumn("rn", row_number().over(wLocal).cast("long"))
-      .join(broadcast(offs), Seq("pid", "block_key"), "left")
-      .withColumn("seq", coalesce(col("off"), lit(0L)) + col("rn"))
-      .drop("pid", "rn", "off")
+      .sortWithinPartitions("block_key", "mention_id")
+      .as[Blocked]
+    val inner = sorted.mapPartitions(inPartition(_, windowSize))
+    val stitched = sorted.mapPartitions(edgeRows(_, windowSize))
+      .repartition(1)
+      .mapPartitions(stitch(_, windowSize))
+    scorePairs(inner.union(stitched).toDF())
+  }
+
+  private def sameBlock(a: Blocked, b: Blocked): Boolean =
+    java.util.Objects.equals(a.block_key, b.block_key)
+
+  private def pair(a: Blocked, b: Blocked): RawPair =
+    RawPair(a.block_key, a.mention_id, b.mention_id, a.surface, b.surface,
+      a.best_qid, b.best_qid)
+
+  /** Each row paired with its next `w` rows of the same block, inside one
+    * sorted partition. */
+  private def inPartition(rows: Iterator[Blocked], w: Int): Iterator[RawPair] = {
+    val last = new Array[Blocked](w) // row i sits at i % w
+    var i = 0
+    rows.flatMap { r =>
+      val out = (1 to math.min(w, i)).map(k => last((i - k) % w))
+        .filter(sameBlock(_, r)).map(pair(_, r))
+      last(i % w) = r
+      i += 1
+      out
+    }
+  }
+
+  /** The first and last `w` rows of one sorted partition, each once. */
+  private def edgeRows(rows: Iterator[Blocked], w: Int): Iterator[EdgeRow] = {
+    val part = TaskContext.getPartitionId()
+    val head = new Array[Blocked](w)
+    val tail = new Array[Blocked](w) // row i sits at i % w
+    var n = 0L
+    rows.foreach { r =>
+      if (n < w) head(n.toInt) = r
+      tail((n % w).toInt) = r
+      n += 1
+    }
+    (0L until math.min(n, w.toLong)).iterator.map(i => EdgeRow(part, i, n, head(i.toInt))) ++
+      (math.max(w.toLong, n - w) until n).iterator.map(i =>
+        EdgeRow(part, i, n, tail((i % w).toInt)))
+  }
+
+  /** Pairs across partition boundaries from all partitions' edge rows. A
+    * row's global rank is its position plus the sizes of all earlier
+    * partitions; the k-th successor (k <= w) of a row in another partition
+    * is always among that partition's first w rows, and a row with such a
+    * successor is among its own partition's last w rows, so the edge rows
+    * hold every cross-partition pair. */
+  private def stitch(rows: Iterator[EdgeRow], w: Int): Iterator[RawPair] = {
+    val es = rows.toArray.sortBy(e => (e.part, e.pos))
+    val sizes = es.map(e => e.part -> e.size).distinct
+    val offset = sizes.map(_._1).zip(sizes.scanLeft(0L)(_ + _._2)).toMap
+    val rank = es.map(e => offset(e.part) + e.pos)
+    for {
+      i <- es.indices.iterator
+      j <- (i + 1 until es.length).iterator.takeWhile(j => rank(j) - rank(i) <= w)
+      if es(j).part != es(i).part && sameBlock(es(i).m, es(j).m)
+    } yield pair(es(i).m, es(j).m)
+  }
+
+  /** The input written ONCE to a scratch parquet snapshot and read back
+    * (the north_rule's stage-checkpoint pattern), with its row count from
+    * the snapshot's footers.
+    *
+    * The range Exchange runs a separate sampling job over its child, so an
+    * unmaterialized input (annotate!) would execute once for the samples
+    * and once for the shuffle. A cached input is snapshotted too: adaptive
+    * execution wraps each consumer's scan of a cached relation in its own
+    * query stage, which keeps the range Exchange above it from being
+    * reused, and two range Exchanges sample their bounds independently.
+    * A persisted, eagerly checkpointed input is no substitute: under AQE the
+    * sampling job, the shuffle map stage and the checkpoint job race to
+    * build the same cached blocks and re-run annotate a nondeterministic
+    * number of times. A committed file snapshot has no such race and
+    * survives executor loss on a real cluster. It must outlive the returned
+    * (lazy) frame, so it is removed by the exit cleanup, not here. */
+  private def snapshot(m: DataFrame): (DataFrame, Long) = {
+    val spark = m.sparkSession
+    val dir = s"${scratchDir(spark)}/m"
+    m.write.parquet(dir)
+    val rows = graft.ckpt.Snapshots.footerRowCounts(spark, dir).map(_._2).sum
+    (spark.read.parquet(dir), rows)
   }
 
   /** Per-call scratch directory for stage snapshots, on the Spark local
     * dir (tmpfs on this box). Unique per call: a lazily-consumed frame
     * from a previous call must never see its files overwritten. */
-  private def scratchDir(spark: org.apache.spark.sql.SparkSession): String = {
+  private def scratchDir(spark: SparkSession): String = {
     val base = spark.conf.getOption("spark.local.dir")
       .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
       .getOrElse(System.getProperty("java.io.tmpdir"))
@@ -150,72 +216,12 @@ object Pairs {
   private[graft] def cleanupOnExit(dir: String): Unit =
     exitCleanup.synchronized { exitCleanup += dir; () }
 
-  /** Round-2 implementation of blockSeq (persist + eager localCheckpoint).
-    * Kept as a probe/regression target only — see blockSeq's scaladoc for
-    * why it anti-scales under AQE. */
-  private[graft] def blockSeqCheckpoint(m0: DataFrame, numParts: Int): DataFrame = {
-    // repartitionByRange runs a SEPARATE range-sampling job over its input
-    // before the shuffle: without this persist the entire upstream pipeline
-    // (annotate!) executes twice per call
-    val m = m0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val part = m
-      .repartitionByRange(numParts, col("block_key"), col("mention_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    m.unpersist(false) // checkpoint materialized eagerly; input no longer read
-    val cnts = part.groupBy("pid", "block_key").agg(count(lit(1)).as("cnt"))
-    val wOff = Window.partitionBy("block_key").orderBy("pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = cnts
-      .withColumn("off", sum(col("cnt")).over(wOff))
-      .filter(col("off").isNotNull && col("off") > lit(0L))
-      .select(col("pid"), col("block_key"), col("off"))
-    val wLocal = Window.partitionBy("pid", "block_key").orderBy("mention_id")
-    part
-      .withColumn("rn", row_number().over(wLocal).cast("long"))
-      .join(broadcast(offs), Seq("pid", "block_key"), "left")
-      .withColumn("seq", coalesce(col("off"), lit(0L)) + col("rn"))
-      .drop("pid", "rn", "off")
-  }
-
-  /** Sorted-neighborhood candidate pairs within each blocking key.
-    * Input: linked mentions (doc_id, start, end, surface, norm_key,
-    * best_qid). Output: one row per pair with surface similarities and the
-    * same_entity decision (= linked entity agreement). */
-  def candidatePairs(mentions: DataFrame, windowSize: Int = WindowSize,
-      seqImpl: (DataFrame, Int) => DataFrame = blockSeq(_, _)): DataFrame = {
-    val spark = mentions.sparkSession
-    val m = mentions
-      .withColumn("mention_id", mentionIdCol)
-      // blocking key = first token of the normalized surface: coarse enough
-      // that one block mixes different entities ("merge" / "merge join" /
-      // "sort merge join" variants), the realistic record-linkage setup
-      .withColumn("block_key", split(col("norm_key"), " ").getItem(0))
-      .select("block_key", "mention_id", "surface", "best_qid")
-    val ranked = seqImpl(m, spark.sparkContext.defaultParallelism * 2)
-    val left = ranked.select(
-      col("block_key"), col("seq"),
-      col("mention_id").as("id1"), col("surface").as("surface1"),
-      col("best_qid").as("qid1"))
-      .withColumn("k", explode(array((1 to windowSize).map(k => lit(k.toLong)): _*)))
-      .withColumn("seq2", col("seq") + col("k"))
-    val right = ranked.select(
-      col("block_key"), col("seq").as("seq2"),
-      col("mention_id").as("id2"), col("surface").as("surface2"),
-      col("best_qid").as("qid2"))
-    // pin shuffle-hash: both sides are mention-sized; a mis-estimated AQE
-    // broadcast of the full mention table stalls the driver for minutes
-    scorePairs(left.join(right.hint("shuffle_hash"), Seq("block_key", "seq2")))
-  }
-
   /** Reference implementation of the same pairing via a per-block global
     * window — the semantic oracle for `candidatePairs` (PairsCcSpec pins
     * them equal). NOT scalable: the hottest block lands on one task. */
   private[graft] def candidatePairsViaWindow(
       mentions: DataFrame, windowSize: Int = WindowSize): DataFrame = {
-    val m = mentions
-      .withColumn("mention_id", mentionIdCol)
-      .withColumn("block_key", split(col("norm_key"), " ").getItem(0))
+    val m = blocked(mentions)
     val w = Window.partitionBy(col("block_key")).orderBy(col("mention_id"))
     val withNext = (1 to windowSize).foldLeft(m) { (df, k) =>
       df.withColumn(s"next_id_$k", lead(col("mention_id"), k).over(w))

@@ -77,10 +77,9 @@ object TextStats {
     * its first token lands — the pack-then-chunk shape that turns a corpus
     * into fixed-budget pretraining batches. Scale path: the global token
     * prefix sum is TWO-PHASE (per-range-partition local cumsum + broadcast
-    * partition-boundary offsets, the Pairs.blockSeq pattern) — no
-    * single-partition window over the data anywhere; the only global
-    * window runs over numParts boundary rows on the driver side of a
-    * broadcast. */
+    * partition-boundary offsets) — no single-partition window over the
+    * data anywhere; the only global window runs over numParts boundary
+    * rows on the driver side of a broadcast. */
   def pack(docs: DataFrame, capacity: Long = 2048L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession

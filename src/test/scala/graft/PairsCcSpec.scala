@@ -99,22 +99,36 @@ class PairsCcSpec extends AnyFunSuite {
     graft.link.Pairs.rmDir(root)
   }
 
-  test("blockSeq == row_number over (block order by id), even with skew") {
-    // one hot block (700 rows), several cold ones, ids deliberately shuffled
-    val rows = scala.util.Random.shuffle(
-      (1 to 700).map(i => ("hot", i.toLong * 7)) ++
-        (1 to 13).map(i => ("cold", i.toLong * 3)) ++
-        Seq(("x", 5L), ("y", 11L)))
-    val m = rows.toDF("block_key", "mention_id")
-      .withColumn("surface", col("block_key"))
-      .withColumn("best_qid", lit("Q1"))
-    val got = graft.link.Pairs.blockSeq(m, 8)
-      .select("block_key", "mention_id", "seq")
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val want = rows.groupBy(_._1).flatMap { case (b, rs) =>
-      rs.map(_._2).sorted.zipWithIndex.map { case (id, i) => (b, id) -> (i + 1L) }
+  test("boundary stitching: range-sorted pairs == window oracle at any partition count") {
+    // one hot block (80 rows, two surfaces), a cold block, singleton blocks,
+    // null links, doc ids shuffled against the row order
+    val rnd = new scala.util.Random(17)
+    val docIds = rnd.shuffle((1 to 120).map(_.toLong))
+    val keys = (1 to 80).map(i => if (i % 3 == 0) "hot spot" else "hot") ++
+      Seq.fill(13)("cold") ++ (1 to 5).map(i => s"solo$i")
+    val rows = rnd.shuffle(keys.zipWithIndex.map { case (k, i) =>
+      val qid = if (i % 7 == 0) null else s"Q${i % 3}"
+      (docIds(i), i % 40, i % 40 + k.length, k, k, qid)
+    })
+    val mentions = rows.toDF("doc_id", "start", "end", "surface", "norm_key", "best_qid")
+    def key(df: org.apache.spark.sql.DataFrame) =
+      df.select("block_key", "id1", "id2", "surface1", "surface2", "qid1",
+        "qid2", "lev", "jw", "same_entity").collect().map(_.toSeq).toSeq
+    def layout(parts: Int) =
+      Pairs.blocked(mentions)
+        .repartitionByRange(parts, col("block_key"), col("mention_id"))
+        .select(spark_partition_id(), col("block_key")).collect()
+        .map(r => r.getInt(0) -> r.getString(1)).toSeq
+    // the layouts exercise the stitching: the hot block spans >= 3
+    // partitions, and at 100 partitions some hold fewer than W rows
+    assert(layout(5).filter(_._2 == "hot").map(_._1).distinct.size >= 3)
+    assert(layout(100).groupBy(_._1).values.exists(_.size < Pairs.WindowSize))
+    for (w <- Seq(Pairs.WindowSize, 3); parts <- Seq(1, 5, 16, 100)) {
+      val got = key(Pairs.sortedNeighbourPairs(Pairs.blocked(mentions), parts, w))
+      val want = key(Pairs.candidatePairsViaWindow(mentions, w))
+      assert(got.size == got.toSet.size, s"duplicate pairs at w=$w parts=$parts")
+      assert(got.toSet == want.toSet, s"w=$w parts=$parts")
     }
-    assert(got == want)
   }
 
   test("distributed candidatePairs == window-oracle candidatePairs") {

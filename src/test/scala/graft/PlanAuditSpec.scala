@@ -225,4 +225,19 @@ class PlanAuditSpec extends AnyFunSuite {
     // ... and the numParts boundary offsets join back via broadcast
     assert(p.contains("BroadcastHashJoin"), p)
   }
+
+  test("candidatePairs is one range sort: no window, one range Exchange reused") {
+    val pairs = graft.link.Pairs.candidatePairs(Pipeline.annotate(spark, sf))
+    pairs.collect()
+    val p = plan(pairs)
+    assert(!p.contains("Window"), s"pairs must not plan a window:\n$p")
+    // the final adaptive plan, after the action: the boundary pass must
+    // read the in-partition pass's range shuffle, not run its own
+    val range = p.split("== Initial Plan ==")(0).linesIterator
+      .filter(_.contains("rangepartitioning")).toSeq
+    assert(range.count(l => l.contains("Exchange rangepartitioning") &&
+      !l.contains("ReusedExchange")) == 1, s"expected one range shuffle:\n$p")
+    assert(range.exists(_.contains("ReusedExchange")),
+      s"the boundary pass must reuse the range Exchange:\n$p")
+  }
 }

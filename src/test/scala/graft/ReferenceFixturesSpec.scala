@@ -18,7 +18,25 @@ class ReferenceFixturesSpec extends AnyFunSuite {
   import spark.implicits._
 
   val fixtureDir = "/root/reference/opentapioca/tests/data"
+  val dataDir = fixtureDir.stripSuffix("/opentapioca/tests/data") + "/data"
   val dumpPath = s"$fixtureDir/sample_wikidata_items.json.bz2"
+
+  /** A test that reads the reference checkout. Without it the test fails
+    * up front, naming the missing directory and the files it must hold,
+    * instead of failing later inside a Spark scan. */
+  private def fixtureTest(name: String)(body: => Any)(
+      implicit pos: org.scalactic.source.Position): Unit =
+    test(name) {
+      val missing = Seq(fixtureDir, dataDir).filterNot(d => new java.io.File(d).isDirectory)
+      if (missing.nonEmpty) throw new java.io.FileNotFoundException(
+        s"reference fixtures not found: ${missing.mkString(", ")}. This test needs " +
+          "the OpenTapioca checkout's opentapioca/tests/data/{sample_wikidata_items.json.bz2, " +
+          "sample_wikidata_items.tsv, all_items_profile.json, indexing_profile.json, " +
+          "Q30264236.json, Q62653454.json, five-affiliations.ttl} and " +
+          "data/{istex_train,istex_test,RSS-500_wd}.ttl (fixture list: ROADMAP.md, " +
+          "\"Blocking: reference-fixture tests cannot run here\")")
+      body
+    }
 
   lazy val allItemsProfile: DictSpec.Profile =
     DictBuild.loadProfile(s"$fixtureDir/all_items_profile.json")
@@ -30,14 +48,14 @@ class ReferenceFixturesSpec extends AnyFunSuite {
     fixtureItems, allItemsProfile, Map.empty).cache()
 
   // tests/test_dumpreader.py:13-20 — 100 items through the real bz2 scan
-  test("dump scan: 100 items parse from the bz2 fixture via spark.read.text") {
+  fixtureTest("dump scan: 100 items parse from the bz2 fixture via spark.read.text") {
     val ids = fixtureItems.select(col("it.id")).as[String].collect()
     assert(ids.length == 100)
     assert(ids.forall(_.matches("[QPL]\\d+.*")))
   }
 
   // tests/test_wditem.py:7-13 — statement/sitelink/type/edge goldens
-  test("wditem goldens: Q30264236 statements, sitelinks, types, edges") {
+  fixtureTest("wditem goldens: Q30264236 statements, sitelinks, types, edges") {
     val raw = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$fixtureDir/Q30264236.json")), "UTF-8")
     val items = DictBuild.parseDump(spark.createDataset(Seq(raw))).cache()
@@ -59,7 +77,7 @@ class ReferenceFixturesSpec extends AnyFunSuite {
 
   // tests/test_wditem.py:15-22 + test_indexingprofile.py:84-89 — label
   // language fallback and revid
-  test("wditem goldens: Q62653454 label fallback + revid") {
+  fixtureTest("wditem goldens: Q62653454 label fallback + revid") {
     val raw = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$fixtureDir/Q62653454.json")), "UTF-8")
     val items = DictBuild.parseDump(spark.createDataset(Seq(raw)))
@@ -70,7 +88,7 @@ class ReferenceFixturesSpec extends AnyFunSuite {
   }
 
   // tests/test_wikidatagraph.py:26 — pagerank(Q45) from the TSV fixture
-  test("pagerank(Q45) in (0.0003, 0.0004) on the reference graph fixture") {
+  fixtureTest("pagerank(Q45) in (0.0003, 0.0004) on the reference graph fixture") {
     val lines = spark.read.textFile(s"$fixtureDir/sample_wikidata_items.tsv")
     val parsed = lines.map { l =>
       val f = l.split("\t")
@@ -131,7 +149,7 @@ class ReferenceFixturesSpec extends AnyFunSuite {
 
   // tests/test_taggerfactory.py:70-71 + test_tagger.py:52-55 — index the
   // real dump, tag a sentence, expect Q686 at [10, 17)
-  test("end-to-end golden: 'I live in Vanuatu' -> Q686 @ [10,17)") {
+  fixtureTest("end-to-end golden: 'I live in Vanuatu' -> Q686 @ [10,17)") {
     val keys = DictBuild.dictKeys(fixtureDict).cache()
     val maxN = keys.agg(max(col("n_tokens"))).head().getInt(0)
     val docs = Seq((0L, "I live in Vanuatu")).toDF("doc_id", "text")
@@ -146,7 +164,7 @@ class ReferenceFixturesSpec extends AnyFunSuite {
   }
 
   // tests/test_indexingprofile.py — profile JSON load + round-trip
-  test("indexing profile: load fields + JSON round-trip") {
+  fixtureTest("indexing profile: load fields + JSON round-trip") {
     val p = DictBuild.loadProfile(s"$fixtureDir/indexing_profile.json")
     assert(p.language == "en")
     assert(p.name == "affiliations")
@@ -170,7 +188,7 @@ class ReferenceFixturesSpec extends AnyFunSuite {
   }
 
   // classifier.py:184-195 — NIF gold scan over the shipped TTL fixtures
-  test("NIF gold scan: five-affiliations parses 5 contexts / 17 mentions") {
+  fixtureTest("NIF gold scan: five-affiliations parses 5 contexts / 17 mentions") {
     val path = s"$fixtureDir/five-affiliations.ttl"
     val ctx = NifGold.contexts(spark, path).collect()
     assert(ctx.length == 5)
@@ -235,13 +253,13 @@ class ReferenceFixturesSpec extends AnyFunSuite {
     tags.unpersist()
   }
 
-  test("GATE: pairwise F1 vs reference NIF gold on istex_train overlap") {
-    istexGate("/root/reference/data/istex_train.ttl", 750)
+  fixtureTest("GATE: pairwise F1 vs reference NIF gold on istex_train overlap") {
+    istexGate(s"$dataDir/istex_train.ttl", 750)
   }
 
   // the reference's actual evaluation corpus: the HELD-OUT istex test split
-  test("GATE: pairwise F1 vs reference NIF gold on istex_test (held out)") {
-    istexGate("/root/reference/data/istex_test.ttl", 250)
+  fixtureTest("GATE: pairwise F1 vs reference NIF gold on istex_test (held out)") {
+    istexGate(s"$dataDir/istex_test.ttl", 250)
   }
 
   // The OTHER half of the reference's evaluation (README.md/paper): the
@@ -251,8 +269,8 @@ class ReferenceFixturesSpec extends AnyFunSuite {
   // surfaces keep EVERY candidate qid); the gate exercises NIF parsing,
   // extraction, candidate generation, linking, blocking and pairwise
   // agreement on real news text.
-  test("GATE: pairwise F1 vs reference NIF gold on RSS-500 (news domain)") {
-    val path = "/root/reference/data/RSS-500_wd.ttl"
+  fixtureTest("GATE: pairwise F1 vs reference NIF gold on RSS-500 (news domain)") {
+    val path = s"$dataDir/RSS-500_wd.ttl"
     val docIdRe = "/RSS-500/(\\d+)#"
     val ctx = NifGold.contexts(spark, path)
       .withColumn("doc_id", regexp_extract(col("doc_uri"), docIdRe, 1).cast("long"))
