@@ -193,8 +193,9 @@ object Pipeline {
     }
 
   /** best entity link per mention (flagship annotate query). Uses the
-    * single-shuffle fused pipeline; the staged declarative path is the
-    * semantic oracle, pinned equal by ScoringSpec/FusedSpec. */
+    * fused pipeline, shuffle-free while the dictionary is broadcast (one
+    * map pass over the widened documents); the staged declarative path is
+    * the semantic oracle, pinned equal by ScoringSpec/FusedSpec. */
   def annotate(spark: SparkSession, sfDir: String,
       params: Scoring.Params = Scoring.Params()): DataFrame =
     cached(spark, sfDir, s"annotate:$params") {

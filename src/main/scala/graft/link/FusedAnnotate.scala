@@ -1,33 +1,34 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Pipeline
 import graft.model.Bow
 import graft.text.TextOps
 
-/** Single-shuffle annotate pipeline (the 100 TB shape).
-  *
-  * Plan: pages scan -> flatMap n-gram spans (doc-local, no shuffle) ->
-  * equi-join on the blocking key -> per-qid feature attachment (rank
-  * precomputed from pagerank) -> groupByKey(doc_id), the ONE shuffle ->
-  * flatMapGroups running NO_SUB overlap resolution, the tagsLimit cap,
-  * the prune filter, per-mention top-10 by rank, and the full context
-  * classifier in memory (DocClassifier.scoreDoc).
+/** Fused annotate pipeline (the 100 TB shape): span generation, dictionary
+  * probe, NO_SUB overlap resolution, the tagsLimit cap, the prune filter,
+  * per-mention top-10 by rank and the full context classifier
+  * (DocClassifier.scoreDoc) for one document at a time.
   *
   * Feature attachment has two strategies (size-gated, differential-tested
   * equal):
-  *  - "broadcast": collect the (small) dictionary once and ship a map —
-  *    thin shuffle rows, zero extra joins. Right while the dictionary fits
-  *    comfortably on the driver (<= BroadcastDictLimit rows).
-  *  - "join": per-qid features stay a DataFrame and attach via an
-  *    equi-join on qid before the doc shuffle. No driver-side collect
-  *    whose volume scales with dictionary size — the 10^7-10^8-item path.
+  *  - "broadcast": NO shuffle. The dictionary is collected once per
+  *    Artifacts into a norm_key -> (qid, features) map and broadcast; each
+  *    document row is tagged inside one map pass over the input (cap ->
+  *    first-token-filtered n-gram spans -> map probe -> processDoc), the
+  *    way the reference's Solr FST tagger serves one request per document.
+  *    Right while the dictionary fits comfortably on the driver
+  *    (<= BroadcastDictLimit rows).
+  *  - "join" / "salted": spans explode into rows, equi-join the dictionary
+  *    keys and the per-qid feature frame, then groupByKey(doc_id) — the ONE
+  *    shuffle — regroups them for processDoc. No driver-side collect whose
+  *    volume scales with dictionary size: the 10^7-10^8-item path.
   *
-  * Every per-document step is bounded (<= 500 spans x 10 tags), so the
-  * fused group function is O(1) memory per key. The declarative stages
-  * (Mentions/Scoring) remain the semantic oracle: FusedSpec pins this
-  * path equal to the staged path, and the driver's DuckDB oracle checks
+  * Every per-document step is bounded (<= 500 spans x 10 tags), so each
+  * document costs O(1) memory. The declarative stages (Mentions/Scoring)
+  * remain the semantic oracle: FusedSpec pins this path equal to the
+  * staged path, and the DuckDB oracles (scripts/check_oracles.py) check
   * the staged path independently.
   */
 object FusedAnnotate {
@@ -40,11 +41,8 @@ object FusedAnnotate {
   final case class QidFeat(label: String, edges: Array[Int],
       nbStatements: Int, nbSitelinks: Int, rank: Double)
 
-  final case class SpanHit(doc_id: Long, norm_key: String, start: Int, end: Int,
-      surface: String, qid: String)
-
-  /** A span hit with its entity features attached (the join strategy's
-    * shuffle row). */
+  /** A span hit with its entity features attached (processDoc's input; the
+    * join strategy's shuffle row). */
   final case class FeatHit(doc_id: Long, norm_key: String, start: Int, end: Int,
       surface: String, qid: String, label: String, edges: Seq[Int],
       nb_statements: Int, nb_sitelinks: Int, rank: Double)
@@ -73,27 +71,39 @@ object FusedAnnotate {
           r.getInt(3), r.getInt(4), r.getDouble(5))
       }.toMap
 
-  // Per-artifacts broadcast cache: annotate() used to collect the feature
-  // map and re-broadcast it (plus the BOW model) on EVERY call — a fixed
-  // per-call driver cost that ate into scaling efficiency. One broadcast
-  // per Artifacts instance is the right lifecycle (the reference builds its
-  // Solr index once and serves many tagging requests).
+  /** The broadcast strategy's dictionary: norm_key -> every candidate
+    * (qid, features) of that key. One map replaces both the dictKeys join
+    * and the qid -> features lookup; a dictKeys qid without an entity row
+    * is dropped, as the inner feature join drops it. */
+  private def keyCandidates(a: Pipeline.Artifacts): Map[String, Array[(String, QidFeat)]] = {
+    val feats = qidFeatures(a)
+    a.dictKeys.select("norm_key", "qid").collect()
+      .flatMap(r => feats.get(r.getString(1)).map(f => r.getString(0) -> (r.getString(1), f)))
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+  }
+
+  // Per-artifacts broadcast cache: one broadcast of the BOW model and (on
+  // first broadcast-strategy use) of the key -> candidates map per
+  // Artifacts instance, never per annotate call (the reference builds its
+  // Solr index once and serves many tagging requests). The map is lazy so
+  // the join/salted strategies never collect the dictionary to the driver.
   // Keyed per (SparkContext, Artifacts): a broadcast created on a stopped
   // session must never be served to a new session reusing the same
   // Artifacts, and keying by context lets the listener below evict every
-  // entry (broadcast handles + the collected feature maps) when its
-  // application ends — the r3 ADVICE JVM-lifetime pin.
+  // entry when its application ends, so no broadcast outlives its context.
+  private final class Shipped(sc: org.apache.spark.SparkContext, a: Pipeline.Artifacts) {
+    val bow = sc.broadcast(a.bow)
+    lazy val dict = sc.broadcast(keyCandidates(a))
+  }
+
   private val bcCache =
     new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.SparkContext, Pipeline.Artifacts),
-      (org.apache.spark.broadcast.Broadcast[Bow.Model],
-       org.apache.spark.broadcast.Broadcast[Map[String, QidFeat]])]()
+      (org.apache.spark.SparkContext, Pipeline.Artifacts), Shipped]()
 
   private val evictorInstalled =
     java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
 
-  private def broadcasts(spark: SparkSession, a: Pipeline.Artifacts) = {
-    val sc = spark.sparkContext
+  private def broadcasts(sc: org.apache.spark.SparkContext, a: Pipeline.Artifacts) = {
     if (evictorInstalled.add(sc))
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
@@ -103,8 +113,7 @@ object FusedAnnotate {
           evictorInstalled.remove(sc); ()
         }
       })
-    bcCache.computeIfAbsent((sc, a), _ =>
-      (sc.broadcast(a.bow), sc.broadcast(qidFeatures(a))))
+    bcCache.computeIfAbsent((sc, a), _ => new Shipped(sc, a))
   }
 
   /** Doc-local pipeline: NO_SUB -> tagsLimit -> prune -> top-10 by rank ->
@@ -240,13 +249,19 @@ object FusedAnnotate {
     out.iterator
   }
 
-  /** Annotate end-to-end with one shuffle. Returns BestLink rows.
+  /** Annotate end-to-end. Returns BestLink rows.
     * strategy: "auto" (size-gated), "broadcast", "join", or "salted"
     * ("join" with the norm_key equi-join routed through
     * [[graft.plans.SaltedJoin]] — the explicit hot-alias-key salting path
     * for Zipfian web-mention skew once the dictionary outgrows broadcast;
     * `saltHotThreshold` is the estimated per-key row count above which a
-    * key is salted). */
+    * key is salted).
+    *
+    * The broadcast strategy runs no shuffle: one map pass over `docs` at
+    * their own partitioning. It tags each input ROW as one document, so
+    * `docs` must hold one row per doc_id (the documents table, an
+    * anti-joined delta); join/salted regroup by doc_id in their shuffle.
+    * Null text is empty text: no spans, no links. */
   def annotate(docs: DataFrame, a: Pipeline.Artifacts,
       params: Scoring.Params, model: Scoring.SvmModel,
       strategy: String = "auto",
@@ -254,9 +269,9 @@ object FusedAnnotate {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val bow = broadcasts(spark, a)._1
-    val spans = Mentions.candidateSpans(docs, a.maxKeyTokens, a.analyzer,
-      Some(Mentions.firstTokenFilter(a.dictKeys)))
+    val shipped = broadcasts(spark.sparkContext, a)
+    val bow = shipped.bow
+    val firstTok = Mentions.firstTokenFilter(a.dictKeys)
 
     val useBroadcast = strategy match {
       case "broadcast" => true
@@ -266,26 +281,34 @@ object FusedAnnotate {
     }
 
     if (useBroadcast) {
-      val feats = broadcasts(spark, a)._2
-      val hits = spans
-        .join(broadcast(a.dictKeys.select("norm_key", "qid")), Seq("norm_key"))
-        .select(col("doc_id"), col("norm_key"), col("start"), col("end"),
-          col("surface"), col("qid"))
-        .as[SpanHit]
-      hits.groupByKey(_.doc_id).flatMapGroups { (docId, it) =>
-        val fm = feats.value
-        val all = it.toArray.flatMap { h =>
-          fm.get(h.qid).map(f => FeatHit(h.doc_id, h.norm_key, h.start, h.end,
-            h.surface, h.qid, f.label, f.edges, f.nbStatements,
-            f.nbSitelinks, f.rank))
-        }
-        processDoc(docId, all, bow.value, params, model)
-      }.toDF()
+      val dict = shipped.dict
+      val (maxN, analyzer) = (a.maxKeyTokens, a.analyzer)
+      docs.select(col("doc_id").cast("long"), col("text"))
+        .as[Mentions.DocRow]
+        .flatMap { d =>
+          // deref the broadcasts INSIDE the task (executor-side lazy fetch)
+          val cands = dict.value
+          val text = Mentions.cappedText(d.text)
+          val hits = new scala.collection.mutable.ArrayBuffer[FeatHit](64)
+          TextOps.ngramSpansFor(analyzer, text, maxN, firstTok.value.ok _).foreach { s =>
+            cands.get(s.key).foreach { cs =>
+              val surface = text.substring(s.start, s.end)
+              cs.foreach { case (qid, f) =>
+                hits += FeatHit(d.doc_id, s.key, s.start, s.end, surface, qid,
+                  f.label, scala.collection.immutable.ArraySeq.unsafeWrapArray(f.edges),
+                  f.nbStatements, f.nbSitelinks, f.rank)
+              }
+            }
+          }
+          processDoc(d.doc_id, hits.toArray, bow.value, params, model)
+        }.toDF()
     } else {
       // join strategy: features flow through the shuffle; the dict never
       // lands on the driver. dictKeys join stays an equi-join (Spark picks
       // broadcast vs shuffle by stats); feature join keys on qid. "salted"
       // additionally scatters hot norm_keys over 16 shuffle partitions.
+      val spans = Mentions.candidateSpans(docs, a.maxKeyTokens, a.analyzer,
+        Some(firstTok))
       val dictKeys = a.dictKeys.select("norm_key", "qid")
       val keyed =
         if (strategy == "salted")

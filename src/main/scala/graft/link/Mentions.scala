@@ -21,6 +21,11 @@ import graft.graph.PageRank
   * At dictionary sizes beyond the broadcast threshold the key join flips to
   * a shuffle hash join; Zipfian hot keys (stopword-like aliases) are handled
   * by AQE skew-join splitting plus the early prune filter (SURVEY.md §4).
+  *
+  * This staged plan is the semantic oracle. Production annotate
+  * ([[FusedAnnotate]]) runs the same steps per document: no shuffle while
+  * the dictionary is broadcast, one doc-keyed shuffle on the join and
+  * salted strategies.
   */
 object Mentions {
 
@@ -31,6 +36,13 @@ object Mentions {
   val MaxLength = 10000 // tagger.py:33,41
   val TagsLimitPerDoc = 500 // tagger.py:45 (Solr tagsLimit)
   val TopTagsPerMention = 10 // tagger.py:118
+
+  /** Document text capped at MaxLength chars (tagger.py:41); null text is
+    * empty text, so it yields no spans. */
+  def cappedText(text: String): String =
+    if (text == null) ""
+    else if (text.length > MaxLength) text.substring(0, MaxLength)
+    else text
 
   /** Membership test over the dictionary's FIRST normalized tokens — the
     * other half of the FST-equivalence plan (SURVEY §4; with
@@ -91,7 +103,8 @@ object Mentions {
 
   /** Candidate spans: token n-grams (1..maxN) with offsets; document-
     * local, emitted from a typed flatMap (the engine's Generator-shaped op,
-    * SURVEY.md §2.9). Text is capped at 10k chars first (tagger.py:41).
+    * SURVEY.md §2.9). Text is capped at 10k chars first (tagger.py:41);
+    * null text emits nothing.
     * With `firstTok` set, n-grams are emitted only at token positions whose
     * first normalized token can start a dictionary key — see
     * [[TokenFilter]]; without it every position emits maxN spans. */
@@ -108,7 +121,7 @@ object Mentions {
           case Some(b) => b.value.ok _
           case None => null
         }
-        val text = if (d.text.length > MaxLength) d.text.substring(0, MaxLength) else d.text
+        val text = cappedText(d.text)
         TextOps.ngramSpansFor(analyzer, text, maxN, pred).map { s =>
           SpanRow(d.doc_id, s.key, s.nTokens, s.start, s.end,
             text.substring(s.start, s.end))

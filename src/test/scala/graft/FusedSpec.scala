@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.link.{FusedAnnotate, Mentions, Scoring}
 
-/** The single-shuffle fused pipeline must equal the staged declarative
+/** The fused pipeline (shuffle-free on the broadcast strategy, one
+  * doc-keyed shuffle on join/salted) must equal the staged declarative
   * pipeline end-to-end (same best links, same scores). */
 class FusedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

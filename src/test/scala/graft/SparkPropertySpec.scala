@@ -132,21 +132,35 @@ class SparkPropertySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(13)
     val junk = Seq("", " ", "   ", "!!!", "(??)", "...,;:", "émile's",
       "ŒUF Δx", "@handle #tag", "a" * 60, "1 2 3 4")
-    // hostile shapes the fixture corpus never produces: empty/blank docs,
-    // punctuation storms, keys gummed to punctuation or possessives,
-    // unicode around keys, a doc at the 10k truncation boundary
+    // hostile shapes the fixture corpus never produces: null/empty/blank
+    // docs, punctuation storms, keys gummed to punctuation or possessives,
+    // unicode around keys (astral-plane surrogate pairs, combining marks,
+    // ZWJ sequences), a doc at the 10k truncation boundary
+    val astral = "\uD835\uDD18\uD835\uDD2B\uD83D\uDE00" // 𝔘𝔫😀
+    val zwj = "\uD83D\uDC69\u200D\uD83D\uDC69\u200D\uD83D\uDC67" // 👩‍👩‍👧
     val docs: Seq[(Long, String)] =
       junk.zipWithIndex.map { case (j, i) => (i.toLong, j) } ++
+        Seq((50L, null), (51L, astral), (52L, zwj), (53L, "e\u0301\u0308 \u0301")) ++
         keys.zipWithIndex.flatMap { case (k, i) =>
           val base = 100L + i * 10
           Seq(
             (base, k),                                    // doc IS the key
             (base + 1, s"$k's (${k}) , $k"),              // possessive+parens
             (base + 2, s"${junk(rnd.nextInt(junk.length))} $k naïve $k"),
-            (base + 3, ("x " * 4990) + k + (" y" * 2600)) // spans 10k cut
+            (base + 3, ("x " * 4990) + k + (" y" * 2600)), // spans 10k cut
+            (base + 4, s"$astral$k$astral $k $astral"),   // surrogates around
+            (base + 5, s"$k\u0301 ${k}e\u0301 $k \u0301$k"), // combining marks
+            (base + 6, s"$zwj $k$zwj$k $zwj $k")          // ZWJ sequences
           )
         }
-    val df = docs.toDF("doc_id", "text")
+    // documents at the 500-span tagsLimit cap: the shortest key repeated
+    // exactly up to the cap, and past it (the cap truncates in doc order)
+    val short = keys.minBy(_.length)
+    val capped = Seq(
+      (1000L, Seq.fill(Mentions.TagsLimitPerDoc)(short).mkString(" , ")),
+      (1001L, Seq.fill(Mentions.TagsLimitPerDoc + 40)(short).mkString(" ; ")))
+    assert(capped.forall(_._2.length <= Mentions.MaxLength))
+    val df = (docs ++ capped).toDF("doc_id", "text")
     val params = Scoring.Params()
     val model = Scoring.ctxModel()
     def collectMap(res: org.apache.spark.sql.DataFrame) = res
@@ -160,6 +174,9 @@ class SparkPropertySpec extends AnyFunSuite {
         a.dictKeys, a.entityDict, a.pagerank, a.bow), params, model))
     val fused = collectMap(FusedAnnotate.annotate(df, a, params, model))
     assert(staged.nonEmpty, "adversarial corpus produced no mentions at all")
+    assert(!fused.keySet.exists(_._1 == 50L), "null text must link nothing")
+    assert(fused.keySet.count(_._1 == 1000L) <= Mentions.TagsLimitPerDoc &&
+      fused.keySet.count(_._1 == 1001L) <= Mentions.TagsLimitPerDoc)
     assert(fused.keySet == staged.keySet)
     fused.foreach { case (k, (surf, qid, score)) =>
       val (s2, q2, sc2) = staged(k)
