@@ -94,12 +94,8 @@ object BenchChild {
       .repartition(spark.sparkContext.defaultParallelism *
         sys.env.getOrElse("SPARK_BENCH_SHUFFLE_MULT", "4").toInt)
 
-  def runPipeline(docs: DataFrame, a: Pipeline.Artifacts): Long = {
-    import graft.link.{FusedAnnotate, Pairs, Scoring}
-    Pairs.candidatePairs(
-      FusedAnnotate.annotate(docs, a, Scoring.Params(), Scoring.defaultModel()))
-      .count()
-  }
+  def runPipeline(docs: DataFrame, a: Pipeline.Artifacts): Long =
+    graft.link.Pairs.candidatePairs(Pipeline.Linker.Default.link(docs, a)).count()
 
   /** Cumulative executor CPU seconds via a stage-completion listener:
     * hypervisor steal inflates wall, not consumed CPU, so this is the

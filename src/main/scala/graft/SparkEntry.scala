@@ -21,7 +21,17 @@ object SparkEntry {
     * propagation -> SVM scoring -> best link) under the frozen NON-TRIVIAL
     * context model (Scoring.ctxModel). */
   def entry(spark: SparkSession): DataFrame =
-    Pipeline.annotateCtx(spark, "/root/testdata/sf0.001")
+    Pipeline.annotate(spark, "/root/testdata/sf0.001", Pipeline.Linker.Ctx)
+
+  /** The annotate queries' rows: one best link per mention, with its
+    * score and log-likelihood when the model makes them checkable. */
+  private def links(best: DataFrame, scored: Boolean = false): DataFrame = {
+    val link = Seq(col("doc_id"), col("start").as("m_start"), col("end").as("m_end"),
+      col("surface"), col("best_qid"))
+    val score = Seq(round(col("score"), 6).as("score"),
+      round(col("log_likelihood"), 6).as("log_likelihood"))
+    best.select(link ++ (if (scored) score else Nil): _*)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- relational coverage over the TPC-H-ish star ----------------------
@@ -95,39 +105,26 @@ object SparkEntry {
       Pipeline.candidates(s, dir)
         .select(col("doc_id"), col("start").as("m_start"), col("end").as("m_end"),
           col("qid"), round(col("rank"), 6).as("rank"), col("tag_order"))),
-    "el_annotate" -> ((s, dir) =>
-      Pipeline.annotate(s, dir)
-        .select(col("doc_id"), col("start").as("m_start"), col("end").as("m_end"),
-          col("surface"), col("best_qid"))),
+    "el_annotate" -> ((s, dir) => links(Pipeline.annotate(s, dir))),
     "el_annotate_salted" -> ((s, dir) =>
       // the Zipf-skew scale mode driven through the driver contract: the
       // 16-way hot-key scatter join (SaltedJoin) replaces the broadcast
       // dict attach; rows must equal el_annotate's oracle exactly
-      Pipeline.annotateSalted(s, dir)
-        .select(col("doc_id"), col("start").as("m_start"), col("end").as("m_end"),
-          col("surface"), col("best_qid"))),
+      links(Pipeline.annotate(s, dir, Pipeline.Linker.Salted))),
     "el_annotate_incr" -> ((s, dir) =>
       // incremental crawl-delta annotate through committed snapshots: the
       // two-phase (day1 commit -> day2 anti-join delta -> union commit)
       // state must equal the one-shot batch annotate — same oracle
-      Pipeline.annotateIncremental(s, dir)
-        .select(col("doc_id"), col("start").as("m_start"), col("end").as("m_end"),
-          col("surface"), col("best_qid"))),
+      links(Pipeline.annotateIncremental(s, dir))),
     "el_annotate_ctx" -> ((s, dir) =>
       // frozen NON-TRIVIAL model: similarity graph + 2-step propagation +
       // SVM arithmetic + BOW log-likelihood all drive the checked output
-      Pipeline.annotateCtx(s, dir)
-        .select(col("doc_id"), col("start").as("m_start"), col("end").as("m_end"),
-          col("surface"), col("best_qid"), round(col("score"), 6).as("score"),
-          round(col("log_likelihood"), 6).as("log_likelihood"))),
+      links(Pipeline.annotate(s, dir, Pipeline.Linker.Ctx), scored = true)),
     "el_annotate_trained" -> ((s, dir) =>
       // frozen spark.ml-TRAINED model (TrainFreeze/LinearSVC): the weights
       // in the served decision function provably came from training —
       // closing the reference's train-classifier entry point (cli.py:176)
-      Pipeline.annotateTrained(s, dir)
-        .select(col("doc_id"), col("start").as("m_start"), col("end").as("m_end"),
-          col("surface"), col("best_qid"), round(col("score"), 6).as("score"),
-          round(col("log_likelihood"), 6).as("log_likelihood"))),
+      links(Pipeline.annotate(s, dir, Pipeline.Linker.Trained), scored = true)),
     "el_annotations" -> ((s, dir) => {
       // JSON annotation sink exercised for real: serialize per-doc JSON,
       // parse it back, project per-doc aggregates the oracle re-derives
@@ -193,9 +190,9 @@ object SparkEntry {
       // the frozen ctx model's best links as the judgment set — exercising
       // the production P/R/F1 evaluation path end-to-end; the oracle
       // re-derives both annotate chains AND the evaluation arithmetic
-      val best = Pipeline.annotateTrained(s, dir)
+      val best = Pipeline.annotate(s, dir, Pipeline.Linker.Trained)
         .select(col("doc_id"), col("start"), col("end"), col("best_qid"))
-      val gold = Pipeline.annotateCtx(s, dir)
+      val gold = Pipeline.annotate(s, dir, Pipeline.Linker.Ctx)
         .select(col("doc_id"), col("start"), col("end"),
           col("best_qid").as("qid"))
       graft.link.Trainer.evaluateDf(best, gold)

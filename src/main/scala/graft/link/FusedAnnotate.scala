@@ -2,7 +2,7 @@ package graft.link
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Pipeline
+import graft.{Pipeline, SessionCache}
 import graft.model.Bow
 import graft.text.TextOps
 
@@ -80,40 +80,6 @@ object FusedAnnotate {
     a.dictKeys.select("norm_key", "qid").collect()
       .flatMap(r => feats.get(r.getString(1)).map(f => r.getString(0) -> (r.getString(1), f)))
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-  }
-
-  // Per-artifacts broadcast cache: one broadcast of the BOW model and (on
-  // first broadcast-strategy use) of the key -> candidates map per
-  // Artifacts instance, never per annotate call (the reference builds its
-  // Solr index once and serves many tagging requests). The map is lazy so
-  // the join/salted strategies never collect the dictionary to the driver.
-  // Keyed per (SparkContext, Artifacts): a broadcast created on a stopped
-  // session must never be served to a new session reusing the same
-  // Artifacts, and keying by context lets the listener below evict every
-  // entry when its application ends, so no broadcast outlives its context.
-  private final class Shipped(sc: org.apache.spark.SparkContext, a: Pipeline.Artifacts) {
-    val bow = sc.broadcast(a.bow)
-    lazy val dict = sc.broadcast(keyCandidates(a))
-  }
-
-  private val bcCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.SparkContext, Pipeline.Artifacts), Shipped]()
-
-  private val evictorInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
-
-  private def broadcasts(sc: org.apache.spark.SparkContext, a: Pipeline.Artifacts) = {
-    if (evictorInstalled.add(sc))
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          val it = bcCache.keySet().iterator()
-          while (it.hasNext) { if (it.next()._1 eq sc) it.remove() }
-          evictorInstalled.remove(sc); ()
-        }
-      })
-    bcCache.computeIfAbsent((sc, a), _ => new Shipped(sc, a))
   }
 
   /** Doc-local pipeline: NO_SUB -> tagsLimit -> prune -> top-10 by rank ->
@@ -269,8 +235,12 @@ object FusedAnnotate {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    val shipped = broadcasts(spark.sparkContext, a)
-    val bow = shipped.bow
+    // broadcast once per (context, Artifacts instance), never per call, as
+    // the reference builds its Solr index once; keyed by reference, since an
+    // Artifacts' case-class hash walks its whole BOW map
+    val sc = spark.sparkContext
+    val byRef = new SessionCache.Ref(a)
+    val bow = SessionCache.broadcast(sc, (byRef, "bow"))(a.bow)
     val firstTok = Mentions.firstTokenFilter(a.dictKeys)
 
     val useBroadcast = strategy match {
@@ -281,7 +251,8 @@ object FusedAnnotate {
     }
 
     if (useBroadcast) {
-      val dict = shipped.dict
+      // only this strategy collects the dictionary to the driver
+      val dict = SessionCache.broadcast(sc, (byRef, "key_candidates"))(keyCandidates(a))
       val (maxN, analyzer) = (a.maxKeyTokens, a.analyzer)
       docs.select(col("doc_id").cast("long"), col("text"))
         .as[Mentions.DocRow]

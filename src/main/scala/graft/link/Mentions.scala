@@ -76,30 +76,11 @@ object Mentions {
 
   // One TokenFilter broadcast per (context, dictKeys frame): the filter is
   // an offline-artifact derivative (the reference compiles its FST once at
-  // index time), so repeated annotate/extract calls must not rebuild or
-  // re-broadcast it. Entries evict when their application ends (the same
-  // lifecycle pin as FusedAnnotate.bcCache).
-  private val ftCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, DataFrame),
-    org.apache.spark.broadcast.Broadcast[TokenFilter]]()
-  private val ftEvictorInstalled =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.SparkContext]()
-
+  // index time), so repeated annotate/extract calls must not rebuild it.
   def firstTokenFilter(dictKeys: DataFrame)
-      : org.apache.spark.broadcast.Broadcast[TokenFilter] = {
-    val sc = dictKeys.sparkSession.sparkContext
-    if (ftEvictorInstalled.add(sc))
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          val it = ftCache.keySet().iterator()
-          while (it.hasNext) { if (it.next()._1 eq sc) it.remove() }
-          ftEvictorInstalled.remove(sc); ()
-        }
-      })
-    ftCache.computeIfAbsent((sc, dictKeys),
-      _ => sc.broadcast(TokenFilter.fromDictKeys(dictKeys)))
-  }
+      : org.apache.spark.broadcast.Broadcast[TokenFilter] =
+    graft.SessionCache.broadcast(dictKeys.sparkSession.sparkContext,
+      (dictKeys, "first_token_filter"))(TokenFilter.fromDictKeys(dictKeys))
 
   /** Candidate spans: token n-grams (1..maxN) with offsets; document-
     * local, emitted from a typed flatMap (the engine's Generator-shaped op,

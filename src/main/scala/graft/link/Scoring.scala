@@ -68,7 +68,7 @@ object Scoring {
     * c=0.01/maxIter=50 with balanced weights + StandardScaler; pairwise
     * F1 = 0.9934 on the training gold). The SERVED query
     * (el_annotate_trained) reads the committed parquet model at
-    * models/trained_svm through Scoring.loadModel (Pipeline.annotateTrained)
+    * models/trained_svm through Scoring.loadModel (Pipeline.Linker.Trained)
     * — these literals exist so the DuckDB oracle can inline the same
     * decision function; TrainerSpec pins sink == literals and that
     * re-running the training reproduces this model's predictions. */
