@@ -122,38 +122,12 @@ object BenchChild {
       .map(d => Pipeline.loadArtifacts(spark, d))
       .getOrElse(Pipeline.buildArtifacts(spark))
 
-  /** Print any stage slower than `thresholdMs` (diagnosis: which stage eats
-    * a slow trial). Enabled with SPARK_BENCH_STAGELOG=1. */
-  private[graft] def addStageLogger(spark: SparkSession, thresholdMs: Long = 3000): Unit = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val info = sc.stageInfo
-        val ms = (for {
-          s <- info.submissionTime; c <- info.completionTime
-        } yield c - s).getOrElse(0L)
-        if (ms >= thresholdMs) {
-          val m = info.taskMetrics
-          val sub = info.submissionTime.map(t => (t % 1000000L) / 1e3).getOrElse(0.0)
-          println(f"STAGELOG sub=$sub%9.2f id=${info.stageId}%5d ${ms / 1e3}%8.2fs tasks=${info.numTasks}%4d " +
-            f"run=${m.executorRunTime / 1e3}%7.1fs cpu=${m.executorCpuTime / 1e9}%7.1fs " +
-            f"gc=${m.jvmGCTime / 1e3}%5.1fs deser=${m.executorDeserializeTime / 1e3}%5.1fs " +
-            f"shW=${m.shuffleWriteMetrics.writeTime / 1e9}%5.1fs shRwait=${m.shuffleReadMetrics.fetchWaitTime / 1e3}%5.1fs " +
-            f"spill=${m.memoryBytesSpilled / 1e9}%.1fg ${info.name.take(60)}%s")
-        }
-      }
-    })
-  }
-
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val cores = args(1).toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val replicate = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPLICATE", "128").toInt
     val spark = session(cores, forScale = mode == "scale")
-    if (sys.env.get("SPARK_BENCH_STAGELOG").contains("1"))
-      addStageLogger(spark,
-        sys.env.getOrElse("SPARK_BENCH_STAGELOG_MS", "3000").toLong)
 
     mode match {
       case "prep" =>

@@ -26,9 +26,6 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = BenchChild.session(cores)
-    if (sys.env.get("SPARK_BENCH_STAGELOG").contains("1"))
-      BenchChild.addStageLogger(spark,
-        sys.env.getOrElse("SPARK_BENCH_STAGELOG_MS", "3000").toLong)
     val planDir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r06"))
     planDir.mkdirs()
 

@@ -185,16 +185,6 @@ object DictBuild {
       .distinct()
   }
 
-  /** End-to-end dictionary build from raw dump lines. */
-  def build(spark: SparkSession, lines: Dataset[String]): (DataFrame, DataFrame) = {
-    val items = parseDump(lines)
-    val closures = DictSpec.profile.restrictTypes.map { c =>
-      c.qid -> subclassClosure(spark, p279Edges(items), c.qid.drop(1).toInt)
-    }.toMap
-    val dict = entityToDocument(items, DictSpec.profile, closures)
-    (dict, dictKeys(dict))
-  }
-
   /** The synthetic dump as a Dataset (test/bench source; production swaps in
     * spark.read.text over the real dump). */
   def syntheticDump(spark: SparkSession): Dataset[String] = {

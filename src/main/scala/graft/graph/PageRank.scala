@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   * index that never receives edge mass. Those indices all hold exactly the
   * compensation value after each iteration, so a 10^8-wide vector costs
   * one scalar. Each iteration is one join + one aggregation; lineage is
-  * truncated per round with localCheckpoint (SURVEY.md §4: iterative-loop
-  * plan-lineage truncation).
+  * truncated per round by [[graft.ckpt.RoundLoop]] (SURVEY.md §4).
   */
 object PageRank {
 
@@ -46,14 +45,13 @@ object PageRank {
     * Returns explicit ranks for every node that ever receives edge mass,
     * plus the shared background value for all other indices in [0, N).
     *
-    * Durability: like ConnectedComponents.run, with `ckptRoot` (param or
-    * `spark.graft.pagerank.snapshotRoot` conf) every `ckptEvery`-th
-    * iteration commits the rank vector through Snapshots.commit and a rerun
-    * on the same graph (identified by edge count + lastQid in the manifest
-    * lineage) resumes from the last committed iteration — including a rerun
-    * asking for MORE iterations, which continues from the committed prefix
-    * (PageRankSpec pins the extended run equal to a fresh full run up to
-    * aggregation-order ulps). */
+    * Rounds run through [[graft.ckpt.RoundLoop]]: each is cut to its l1
+    * aggregation job, and with `ckptRoot` every `ckptEvery`-th iteration
+    * and the final one commit the rank vector (state token `bg:`). A rerun
+    * on the same graph (identified by edge count, content hash and lastQid)
+    * resumes from the last committed iteration, including a rerun asking
+    * for MORE iterations (PageRankSpec pins the extended run equal to a
+    * fresh full run up to aggregation-order ulps). */
   def run(spark: SparkSession, edges: DataFrame, lastQid: Long,
       iterations: Int = 16, ckptRoot: Option[String] = None,
       ckptEvery: Int = 4): Result = {
@@ -65,7 +63,7 @@ object PageRank {
     // signature (resume identity): count alone let a DIFFERENT graph with
     // the same edge count + max qid silently resume from a stale committed
     // snapshot — weight changes flip the hash, matching the CC loop's
-    // edge-set signature discipline (ConnectedComponents.materialize)
+    // edge-set signature discipline
     val sigRow = edges.agg(
       count(lit(1)),
       coalesce(sum(hash(col("src"), col("dst"), col("weight")).cast("long")),
@@ -79,27 +77,16 @@ object PageRank {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     e.count() // materialize once; reused 16x
 
+    val loop = new graft.ckpt.RoundLoop(spark, "pr_ranks", ckptRoot, ckptEvery)
     var ranks: DataFrame = null // (qid, rank) for explicit nodes
-    var prev: DataFrame = null // kept to document round-to-round handoff
     var background = 1.0 / n
     var startIt = 0
-
-    val root = ckptRoot
-      .orElse(spark.conf.getOption("spark.graft.pagerank.snapshotRoot"))
-      .filter(_.nonEmpty)
-    val inputId = s"pr-input:$eCount:$eHash:$lastQid"
-    val Stage = "pr_ranks"
-    for {
-      r <- root
-      (path, m) <- graft.ckpt.Snapshots.latest(spark, r, Stage)
-      if m.inputs.headOption.contains(inputId)
-      doneIt = m.inputs(1).stripPrefix("it:").toInt
-      if doneIt < iterations
-    } {
-      ranks = spark.read.parquet(path)
-      background = m.inputs(2).stripPrefix("bg:").toDouble
-      startIt = doneIt + 1
-    }
+    loop.resume(s"pr-input:$eCount:$eHash:$lastQid", upTo = iterations)
+      .foreach { case (committed, rounds, state) =>
+        ranks = committed
+        background = state.head.stripPrefix("bg:").toDouble
+        startIt = rounds
+      }
 
     for (it <- startIt until iterations) {
       val srcRank =
@@ -109,32 +96,14 @@ object PageRank {
       val nv = srcRank
         .groupBy(col("dst"))
         .agg(sum(col("srank") * col("weight")).as("mass"))
-      // LAZY localCheckpoint truncates the logical plan (16 nested
-      // join+agg rounds otherwise OOM the driver during planning); the l1
-      // aggregation right after is the ONE materializing job per round
-      val newRanks = nv.select(col("dst").as("qid"), col("mass").as("rank"))
+      // the cut truncates the logical plan (16 nested join+agg rounds
+      // otherwise OOM the driver during planning); l1 is its one job
+      val next = nv.select(col("dst").as("qid"), col("mass").as("rank"))
         .repartition(parts, col("qid"))
-        .localCheckpoint(false)
-      val l1 = newRanks.agg(sum(col("rank"))).head().getDouble(0)
-      // free the previous round's checkpoint blocks (the final round's stay:
-      // they back the returned ranks frame)
-      if (prev != null)
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(prev)
-      prev = newRanks
-      val comp = (1.0 - l1) / n
-      ranks = newRanks.withColumn("rank", col("rank") + lit(comp))
-      background = comp
-      // commit every ckptEvery-th iteration (and the final one): re-root
-      // the rank vector on the committed parquet so a rerun resumes here
-      root.foreach { r =>
-        if ((it + 1) % ckptEvery == 0 || it == iterations - 1) {
-          val (path, _) = graft.ckpt.Snapshots.commit(ranks, r, Stage,
-            Seq(inputId, s"it:$it", s"bg:$background"))
-          org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(prev)
-          prev = null
-          ranks = spark.read.parquet(path)
-        }
-      }
+      val (newRanks, l1) = loop.cut(next)(_.agg(sum(col("rank"))).head().getDouble(0))
+      background = (1.0 - l1) / n
+      ranks = loop.commit(newRanks.withColumn("rank", col("rank") + lit(background)),
+        it + 1, Seq(s"bg:$background"), last = it == iterations - 1)
     }
     e.unpersist()
     Result(ranks, background, n, lastQid)

@@ -66,31 +66,26 @@ object ConnectedComponents {
 
   /** Runs to fixpoint; returns (node, component).
     *
-    * Durability: by default rounds materialize via localCheckpoint (fast,
-    * but blocks die with an executor — fine on local[k]). With `ckptRoot`
-    * set (param or `spark.graft.cc.snapshotRoot` conf), every `ckptEvery`-th
-    * round is COMMITTED through Snapshots.commit (parquet + manifest with
-    * lineage + per-partition counters), the working frame is re-rooted on
-    * the committed files, and a rerun on the SAME input (identified by the
-    * initial edge-set signature in the manifest lineage) resumes from the
-    * last committed round instead of round 0 — the north_rule's
-    * resume-from-checkpoint contract, kill-tested in PairsCcSpec.
+    * Rounds run through [[graft.ckpt.RoundLoop]]: each is cut to its
+    * edge-set signature job. With `ckptRoot`, every `ckptEvery`-th round is
+    * committed (state token `sig:`), and a rerun on the SAME input
+    * (identified by the post-cascade edge-set signature) resumes from the
+    * last committed round instead of round 0, kill-tested in PairsCcSpec.
     * `onRound` observes each executed round index (tests use it to prove a
     * resumed run skipped the committed prefix). */
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 50,
-      verbose: Boolean = false, ckptRoot: Option[String] = None,
-      ckptEvery: Int = 3, onRound: Int => Unit = _ => ()): DataFrame = {
-    def materialize(df: DataFrame): (DataFrame, (Long, Long)) = {
-      // lazy localCheckpoint: truncates lineage across rounds (plan blowup
-      // otherwise); the signature aggregation is the one materializing job.
-      // No explicit repartition: the round body ends in a distinct(), which
-      // already hash-partitions at AQE-coalesced width — an extra exchange
-      // per round bought nothing.
-      val p = df.localCheckpoint(false)
-      val r = p.agg(count(lit(1)),
-        coalesce(sum(hash(col("src"), col("dst")).cast("long")), lit(0L))).head()
-      (p, (r.getLong(0), r.getLong(1)))
-    }
+      ckptRoot: Option[String] = None, ckptEvery: Int = 3,
+      onRound: Int => Unit = _ => ()): DataFrame = {
+    val loop = new graft.ckpt.RoundLoop(spark, "cc_rounds", ckptRoot, ckptEvery)
+    // the signature aggregation is each cut's one materializing job. No
+    // explicit repartition: the round body ends in a distinct(), which
+    // already hash-partitions at AQE-coalesced width
+    def materialize(df: DataFrame): (DataFrame, (Long, Long)) =
+      loop.cut(df) { p =>
+        val r = p.agg(count(lit(1)),
+          coalesce(sum(hash(col("src"), col("dst")).cast("long")), lit(0L))).head()
+        (r.getLong(0), r.getLong(1))
+      }
 
     // Orient min-ward (dst < src) and materialize the deduped input at
     // session width (one shuffle over the raw edges).
@@ -102,12 +97,6 @@ object ConnectedComponents {
         .distinct())
     val origParts = spark.conf.get("spark.sql.shuffle.partitions")
 
-    // Committed-snapshot durability (opt-in): identify this input by its
-    // initial edge-set signature; resume from the newest committed round
-    // whose manifest lineage carries the same identity.
-    val root = ckptRoot.orElse(spark.conf.getOption("spark.graft.cc.snapshotRoot"))
-      .filter(_.nonEmpty)
-
     // Size-gated local endgame (the standard big-graph CC design, e.g.
     // GraphFrames' aggregateMessages loop with a local finisher): the
     // same-entity edge set of a mention graph is tiny relative to the
@@ -118,15 +107,15 @@ object ConnectedComponents {
     // the INITIAL signature so the eligible path pays for no distributed
     // rounds at all. At 10^12-document scale the edge set of a GLOBAL
     // graph exceeds any driver, so the loop path stays the default
-    // whenever durability is requested (root defined) or the set is
+    // whenever durability is requested (ckptRoot set) or the set is
     // large; the gate is measured per-input, exactly like a
     // broadcast-join threshold.
     val localMax =
       spark.conf.getOption("spark.graft.cc.localSolveEdges")
         .map(_.toLong).getOrElse(2000000L)
-    if (root.isEmpty && sig._1 <= localMax) {
+    if (!loop.durable && sig._1 <= localMax) {
       val rows = cur.select(col("src"), col("dst")).collect()
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(cur)
+      loop.release()
       val parent = new java.util.HashMap[Long, Long](rows.length * 2)
       def find(x: Long): Long = {
         var r = x
@@ -164,7 +153,6 @@ object ConnectedComponents {
     // task scheduling (hundreds of sub-second stages) than on data.
     val loopParts = math.max(4L, math.min(origParts.toLong, sig._1 / 250000L + 4L))
     spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    var prev0 = cur
     // Pre-loop compression cascade: 5 chained pointer jumps cut residual
     // chain depth ~32x before the first (much more expensive) star round —
     // the sorted-neighborhood mention graph is path-shaped, where the stars
@@ -172,56 +160,29 @@ object ConnectedComponents {
     // so one trailing distinct washes all five applications.
     val pre = materialize(
       compress(compress(compress(compress(compress(cur))))).distinct())
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(prev0)
     cur = pre._1
     sig = pre._2
     var prevSig = (-1L, 0L)
     var rounds = 0
-    val inputId = s"cc-input:${sig._1}:${sig._2}"
-    val Stage = "cc_rounds"
-    for {
-      r <- root
-      (path, m) <- graft.ckpt.Snapshots.latest(spark, r, Stage)
-      if m.inputs.headOption.contains(inputId)
-    } {
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(cur)
-      cur = spark.read.parquet(path)
-      rounds = m.inputs(1).stripPrefix("round:").toInt
-      val s = m.inputs(2).stripPrefix("sig:").split(":")
+    loop.resume(s"cc-input:${sig._1}:${sig._2}").foreach { case (committed, done, state) =>
+      val s = state.head.stripPrefix("sig:").split(":")
+      cur = committed
+      rounds = done
       sig = (s(0).toLong, s(1).toLong)
-      if (verbose) println(s"CC resume: round $rounds from $path")
     }
 
     try {
       while (sig != prevSig && rounds < maxRounds) {
         prevSig = sig
-        val t0 = System.nanoTime()
-        val prev = cur
         // exactly ONE alternation per materialization: largeStar/smallStar
         // each read their input several times (union + aggregate + join),
         // so chaining two rounds unmaterialized re-executes the inner
         // round's whole subtree multiplicatively (measured 7x slower)
         val (next, nextSig) = materialize(smallStar(compress(largeStar(cur))))
-        // free the previous round's checkpoint blocks: leaving them cached
-        // fills the block manager and degrades mid-run rounds 10-20x
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(prev)
-        cur = next
         sig = nextSig
         rounds += 1
         onRound(rounds)
-        // commit every ckptEvery-th round: re-root the working frame on the
-        // committed parquet (lineage + per-partition counters in the
-        // manifest) so at most ckptEvery rounds replay after a crash
-        root.foreach { r =>
-          if (rounds % ckptEvery == 0) {
-            val (path, _) = graft.ckpt.Snapshots.commit(cur, r, Stage,
-              Seq(inputId, s"round:$rounds", s"sig:${sig._1}:${sig._2}"))
-            org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(cur)
-            cur = spark.read.parquet(path)
-          }
-        }
-        if (verbose) println(
-          f"CC round $rounds%2d: edges=${sig._1}%10d  ${(System.nanoTime() - t0) / 1e9}%6.2f s")
+        cur = loop.commit(next, rounds, Seq(s"sig:${sig._1}:${sig._2}"))
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", origParts)
     require(sig == prevSig,

@@ -197,6 +197,36 @@ object DocClassifier {
     out
   }
 
+  /** Per-mention argmax (classify_mentions, classifier.py:323-338): for
+    * each (start, end) run of `tags`, sorted by (start, end, tag_order),
+    * the tag of highest score > 0; ties go to the first, lowest tag_order.
+    * `scores(i)` is the score of `tags(i)`. */
+  def bestPerMention(tags: Array[TagRow], scores: Array[Double]): Iterator[BestLink] = {
+    val out = new scala.collection.mutable.ArrayBuffer[BestLink](tags.length)
+    var i = 0
+    while (i < tags.length) {
+      val s = tags(i).start; val e = tags(i).end
+      var hi = i
+      while (hi < tags.length && tags(hi).start == s && tags(hi).end == e) hi += 1
+      var bestI = -1
+      var bestScore = 0.0
+      var j = i
+      while (j < hi) {
+        if (scores(j) > 0.0 && (bestI < 0 || scores(j) > bestScore)) {
+          bestI = j; bestScore = scores(j)
+        }
+        j += 1
+      }
+      if (bestI >= 0) {
+        val t = tags(bestI)
+        out += BestLink(t.doc_id, t.start, t.end, t.surface, t.norm_key,
+          t.log_likelihood, t.qid, t.label, scores(bestI))
+      }
+      i = hi
+    }
+    out.iterator
+  }
+
   /** Fused best-link stage: one doc-keyed shuffle, in-memory classifier. */
   def bestLinks(tags: DataFrame, params: Scoring.Params,
       model: Scoring.SvmModel): DataFrame = {
@@ -211,23 +241,7 @@ object DocClassifier {
 
     typed.groupByKey(_.doc_id).flatMapGroups { (_, it) =>
       val docTags = it.toArray.sortBy(t => (t.start, t.end, t.tag_order))
-      val scores = scoreDoc(docTags, params, model)
-      // per-mention argmax with score > 0, ties by tag_order
-      // (classify_mentions, classifier.py:323-338)
-      docTags.indices
-        .groupBy(i => (docTags(i).start, docTags(i).end))
-        .valuesIterator
-        .flatMap { idxs =>
-          val best = idxs
-            .filter(i => scores(i) > 0.0)
-            .sortBy(i => (-scores(i), docTags(i).tag_order))
-            .headOption
-          best.map { i =>
-            val t = docTags(i)
-            BestLink(t.doc_id, t.start, t.end, t.surface, t.norm_key,
-              t.log_likelihood, t.qid, t.label, scores(i))
-          }
-        }
+      bestPerMention(docTags, scoreDoc(docTags, params, model))
     }.toDF()
   }
 }

@@ -82,6 +82,13 @@ object FusedAnnotate {
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
   }
 
+  /** Sort key of a span `idx` of one document: ascending keys order the
+    * spans by (start asc, end desc), and the low 20 bits give `idx` back.
+    * Sound for distinct spans with 0 <= start < end <= Mentions.MaxLength
+    * (start and 16383 - end each fit 14 bits) and idx < 2^20. */
+  private[link] def spanOrderKey(start: Int, end: Int, idx: Int): Long =
+    ((start.toLong << 14 | (16383 - end).toLong) << 20) | idx.toLong
+
   /** Doc-local pipeline: NO_SUB -> tagsLimit -> prune -> top-10 by rank ->
     * context classifier -> per-mention argmax. Shared by both strategies. */
   private def processDoc(docId: Long, all: Array[FeatHit], bm: Bow.Model,
@@ -117,16 +124,12 @@ object FusedAnnotate {
       spanStart(i) = all(runStart(i)).start; spanEnd(i) = all(runStart(i)).end
       i += 1
     }
-    // (start asc, end desc) order via a primitive packed-key sort: spans
-    // are distinct (start, end) pairs bounded by the 10k text cap, so
-    // (start << 14 | (16383 - end)) << 20 | idx sorts identically to the
-    // previous boxed-Integer comparator sort without allocating an Integer
-    // per span in the engine's hottest flatMapGroups (guide §1.2 /
-    // per-task work)
+    // (start asc, end desc) order via a primitive packed-key sort: no
+    // Integer per span in the engine's hottest per-document pass
     val packed = new Array[Long](nSpans)
     i = 0
     while (i < nSpans) {
-      packed(i) = ((spanStart(i).toLong << 14 | (16383 - spanEnd(i)).toLong) << 20) | i.toLong
+      packed(i) = spanOrderKey(spanStart(i), spanEnd(i), i)
       i += 1
     }
     java.util.Arrays.sort(packed)
@@ -187,32 +190,7 @@ object FusedAnnotate {
       }
     }
     val sorted = tags.toArray
-    val scores = DocClassifier.scoreDoc(sorted, params, model)
-    // per-mention argmax with score > 0; tags are grouped by span and
-    // ordered by tag_order, so the first max in each run wins ties
-    val out = new scala.collection.mutable.ArrayBuffer[DocClassifier.BestLink](nSpans)
-    i = 0
-    while (i < sorted.length) {
-      val s = sorted(i).start; val e = sorted(i).end
-      var hi = i
-      while (hi < sorted.length && sorted(hi).start == s && sorted(hi).end == e) hi += 1
-      var bestI = -1
-      var bestScore = 0.0
-      var j = i
-      while (j < hi) {
-        if (scores(j) > 0.0 && (bestI < 0 || scores(j) > bestScore)) {
-          bestI = j; bestScore = scores(j)
-        }
-        j += 1
-      }
-      if (bestI >= 0) {
-        val t = sorted(bestI)
-        out += DocClassifier.BestLink(t.doc_id, t.start, t.end, t.surface,
-          t.norm_key, t.log_likelihood, t.qid, t.label, scores(bestI))
-      }
-      i = hi
-    }
-    out.iterator
+    DocClassifier.bestPerMention(sorted, DocClassifier.scoreDoc(sorted, params, model))
   }
 
   /** Annotate end-to-end. Returns BestLink rows.

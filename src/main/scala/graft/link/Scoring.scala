@@ -98,10 +98,6 @@ object Scoring {
       r.getDouble(r.fieldIndex("intercept")))
   }
 
-  /** tag key column: identifies a (mention-span, qid) pair within a doc. */
-  private def tagKeyCols(prefix: String): Seq[Column] =
-    Seq(col(s"${prefix}start"), col(s"${prefix}end"), col(s"${prefix}qid"))
-
   /** DirectLinkSimilarity (similarities.py:28-39): 1 per direction of
     * (equality or direct edge). */
   def directLinkSim(qidA: Column, edgesA: Column, qidB: Column, edgesB: Column): Column =
@@ -186,8 +182,6 @@ object Scoring {
     all.withColumn("weight", col("raw_sim") / sum(col("raw_sim")).over(wSrc))
       .drop("raw_sim")
   }
-
-  private val BaseFeatures = Seq("log_likelihood", "rank", "nb_statements", "nb_sitelinks")
 
   /** Attach propagated feature columns f{step}_{i} for i in 0..4,
     * step in 0..nbSteps (build_feature_vectors_for_doc,

@@ -232,9 +232,4 @@ object TextOps {
     // once per surviving span in the fused hot path)
     phrase.length <= 4 &&
       pruneRe.matcher(phrase).matches() && phrase == phrase.toLowerCase
-
-  /** SQL fragment (DuckDB + Spark compatible) equivalent of prunePhrase for
-    * ASCII input, used to keep the driver oracle in lockstep. */
-  val pruneSqlPredicate: String =
-    "(regexp_matches(surface, '^([a-zA-Z0-9_]{1,2}|[0-9 ]{0,4})$') AND surface = lower(surface))"
 }

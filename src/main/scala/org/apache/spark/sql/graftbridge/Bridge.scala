@@ -13,10 +13,10 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Free the block-manager storage behind a localCheckpoint()ed Dataset.
-    * Iterative jobs (PageRank, connected components) checkpoint every round
-    * to truncate lineage; without freeing the previous round's blocks the
-    * block manager fills and mid-job rounds degrade 10-20x (round-1 showed
-    * bimodal 2s/45s CC rounds from exactly this).
+    * graft.ckpt.RoundLoop, the round loop of PageRank and connected
+    * components, frees each round's cut with it once the next round has
+    * materialized; left cached, the blocks fill the block manager and
+    * mid-job rounds degrade 10-20x (bimodal 2s/45s CC rounds).
     */
   def unpersistLocalCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
     df match {

@@ -55,7 +55,7 @@ class PageRankSpec extends AnyFunSuite {
     PageRank.run(spark, w, lastQid, iterations = 6,
       ckptRoot = Some(root), ckptEvery = 4)
     val snap = graft.ckpt.Snapshots.latest(spark, root, "pr_ranks")
-    assert(snap.nonEmpty && snap.get._2.inputs(1) == "it:5")
+    assert(snap.nonEmpty && snap.get._2.inputs(1) == "round:6")
     // rerun asking for the full 16: must resume at it=6 and end equal to an
     // un-checkpointed fresh 16-iteration run (up to the summation-order ulp
     // of the l1 aggregation — the parquet snapshot partitions differently
