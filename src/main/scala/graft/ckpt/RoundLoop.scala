@@ -77,3 +77,12 @@ final class RoundLoop(spark: SparkSession, stage: String, ckptRoot: Option[Strin
     live = null
   }
 }
+
+object RoundLoop {
+
+  /** Edge-count gate of the iterative graph solves (PageRank, connected
+    * components): at or below it the edges are collected once and solved
+    * on the driver, since 2M edges are tens of MB there and a distributed
+    * round at that size costs scheduling latency, not compute. */
+  val LocalSolveEdges: Long = 2000000L
+}

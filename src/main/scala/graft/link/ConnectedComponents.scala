@@ -100,19 +100,19 @@ object ConnectedComponents {
     // Size-gated local endgame (the standard big-graph CC design, e.g.
     // GraphFrames' aggregateMessages loop with a local finisher): the
     // same-entity edge set of a mention graph is tiny relative to the
-    // corpus — when it fits trivially on the driver (default 2M edges =
-    // 32 MB; conf spark.graft.cc.localSolveEdges, 0 disables), a
-    // driver-side union-find replaces the whole compression cascade + star
-    // loop, whose cost at this size is pure scheduling latency. Checked on
-    // the INITIAL signature so the eligible path pays for no distributed
-    // rounds at all. At 10^12-document scale the edge set of a GLOBAL
+    // corpus — when it fits trivially on the driver (default
+    // RoundLoop.LocalSolveEdges; conf spark.graft.cc.localSolveEdges, 0
+    // disables), a driver-side union-find replaces the whole compression
+    // cascade + star loop, whose cost at this size is pure scheduling
+    // latency. Checked on the INITIAL signature so the eligible path pays
+    // for no distributed rounds at all. At 10^12-document scale the edge set of a GLOBAL
     // graph exceeds any driver, so the loop path stays the default
     // whenever durability is requested (ckptRoot set) or the set is
     // large; the gate is measured per-input, exactly like a
     // broadcast-join threshold.
     val localMax =
       spark.conf.getOption("spark.graft.cc.localSolveEdges")
-        .map(_.toLong).getOrElse(2000000L)
+        .map(_.toLong).getOrElse(graft.ckpt.RoundLoop.LocalSolveEdges)
     if (!loop.durable && sig._1 <= localMax) {
       val rows = cur.select(col("src"), col("dst")).collect()
       loop.release()

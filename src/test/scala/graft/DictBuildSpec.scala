@@ -16,11 +16,21 @@ class DictBuildSpec extends AnyFunSuite {
   }
 
   test("P279 subclass closure matches plain-Scala fixpoint") {
-    val got = DictBuild.subclassClosure(spark, DictBuild.p279Edges(items), 200)
-    assert(got == DictSpec.subclassClosure(200))
-    assert(got == Set(200, 201, 202))
-    val animal = DictBuild.subclassClosure(spark, DictBuild.p279Edges(items), 210)
-    assert(animal == Set(210, 211))
+    import spark.implicits._
+    val dump = DictBuild.p279Edges(items)
+    val twoCycle = Seq((1, 2), (2, 1), (3, 2)).toDF("child", "parent")
+    val selfLoop = Seq((5, 5), (6, 5)).toDF("child", "parent")
+    def closure(edges: org.apache.spark.sql.DataFrame, root: Int) =
+      DictBuild.subclassClosure(spark, edges, root)
+    assert(closure(dump, 200) == DictSpec.subclassClosure(200))
+    assert(closure(dump, 200) == Set(200, 201, 202))
+    assert(closure(dump, 210) == Set(210, 211))
+    // 201 is no P279 parent: its closure is itself
+    assert(closure(dump, 201) == DictSpec.subclassClosure(201))
+    assert(closure(dump, 201) == Set(201))
+    assert(closure(twoCycle, 1) == Set(1, 2, 3))
+    assert(closure(twoCycle, 3) == Set(3))
+    assert(closure(selfLoop, 5) == Set(5, 6))
   }
 
   test("entity_to_document matches plain-Scala projection row by row") {

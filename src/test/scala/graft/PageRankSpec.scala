@@ -46,6 +46,22 @@ class PageRankSpec extends AnyFunSuite {
     assert(math.abs(totalMass - 1.0) < 1e-9)
   }
 
+  test("the driver solve below the gate equals the distributed loop") {
+    val items = DictBuild.parseDump(DictBuild.syntheticDump(spark))
+    val (weighted, lastQid) = PageRank.normalizeEdges(PageRank.rawEdgesFromItems(items))
+    val w = weighted.persist()
+    val local = PageRank.run(spark, w, lastQid)
+    val loop = PageRank.solve(spark, w, lastQid, localSolveEdges = 0)
+    val a = local.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val b = loop.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(a.keySet == b.keySet)
+    a.foreach { case (q, r) => assert(math.abs(r - b(q)) < 1e-12, s"rank(Q$q)") }
+    assert(math.abs(local.background - loop.background) < 1e-12)
+    assert(local.ranks.schema.map(f => f.name -> f.dataType) ==
+      loop.ranks.schema.map(f => f.name -> f.dataType))
+    w.unpersist()
+  }
+
   test("power method resumes from committed snapshots (partial -> full run)") {
     val items = DictBuild.parseDump(DictBuild.syntheticDump(spark))
     val (weighted, lastQid) = PageRank.normalizeEdges(PageRank.rawEdgesFromItems(items))

@@ -46,7 +46,13 @@ class RoundLoopSpec extends AnyFunSuite {
   test("a PageRank run frees every round's blocks, with and without ckptRoot") {
     val items = DictBuild.parseDump(DictBuild.syntheticDump(spark))
     val (weighted, lastQid) = PageRank.normalizeEdges(PageRank.rawEdgesFromItems(items))
-    assertOnlyLastRoundLeft(PageRank.run(spark, weighted, lastQid, iterations = 5).ranks)
+    // the loop without ckptRoot runs only above the local-solve gate
+    assertOnlyLastRoundLeft(PageRank.solve(spark, weighted, lastQid, iterations = 5,
+      localSolveEdges = 0).ranks)
+    // below it the driver solve persists nothing
+    val before = persisted
+    PageRank.run(spark, weighted, lastQid, iterations = 5).ranks.collect()
+    assert(persisted == before, s"persisted by the local solve: ${persisted -- before}")
     val root = java.nio.file.Files.createTempDirectory("graft_pr_free").toString
     try assertOnlyLastRoundLeft(PageRank.run(spark, weighted, lastQid, iterations = 5,
       ckptRoot = Some(root), ckptEvery = 2).ranks)

@@ -227,16 +227,18 @@ class SparkPropertySpec extends AnyFunSuite {
 
   test("pagerank conserves total mass exactly at every compensation step") {
     import spark.implicits._
-    for (seed <- Seq(8, 77)) {
+    // each seed on the driver solve (default gate) and the distributed loop (0)
+    for (seed <- Seq(8, 77); gate <- Seq(graft.ckpt.RoundLoop.LocalSolveEdges, 0L)) {
       val rnd = new scala.util.Random(seed)
       val raw = Seq.fill(600)((rnd.nextInt(80).toLong, rnd.nextInt(120).toLong))
         .filter { case (s, d) => s != d }
         .toDF("src", "dst")
       val (edges, lastQid) = graft.graph.PageRank.normalizeEdges(raw)
-      val res = graft.graph.PageRank.run(spark, edges, lastQid, iterations = 6)
+      val res = graft.graph.PageRank.solve(spark, edges, lastQid, iterations = 6,
+        localSolveEdges = gate)
       val explicitRanks = res.ranks.collect()
         .map(r => r.getLong(0) -> r.getDouble(1))
-      assert(explicitRanks.forall(_._2 > 0.0), s"seed=$seed: nonpositive rank")
+      assert(explicitRanks.forall(_._2 > 0.0), s"seed=$seed gate=$gate: nonpositive rank")
       assert(res.background > 0.0)
       // ranks = mass + comp for receiving nodes, background = comp for the
       // rest, so sum(explicit) + (n - |explicit|) * background == 1 exactly
@@ -245,7 +247,7 @@ class SparkPropertySpec extends AnyFunSuite {
       val total = explicitRanks.map(_._2).sum +
         (res.n - explicitRanks.length) * res.background
       assert(math.abs(total - 1.0) < 1e-9,
-        s"seed=$seed: total mass $total != 1")
+        s"seed=$seed gate=$gate: total mass $total != 1")
     }
   }
 
